@@ -1,7 +1,6 @@
 package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /**
@@ -29,57 +28,13 @@ trait Checkpointer {
   def durable: Boolean = false
 }
 
-/** No-op: keep the lazy Catalyst DAG. */
-object NoopCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame = df
-}
-
-/** Persist each stage in memory/disk — stage results are reused across the
-  * multiple actions the pipeline and its consumers run, without parquet
-  * round-trips. Does NOT truncate lineage. */
-object CacheCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-}
-
-/** Materialise each stage AND truncate its lineage (localCheckpoint).
-  * Essential: stage outputs are reused by several downstream joins, and
+/** Materialise each stage through [[Materialize]] (its master-decided
+  * policy). Stage outputs are reused by several downstream joins, and
   * every reuse would otherwise inline the whole upstream logical plan —
-  * plan size grows exponentially with pipeline depth without truncation.
-  * Right default for local/interactive runs; ParquetCheckpointer gives the
-  * same truncation plus durability/resume for cluster runs. */
+  * plan size grows exponentially with pipeline depth without the cut.
+  * ParquetCheckpointer gives the same cut plus durability/resume. */
 object LocalCheckpointer extends Checkpointer {
-  // eager = true (round-7 reversal of the round-1 lazy choice, measured):
-  // under AQE, "lazy" localCheckpoint is not lazy — Dataset.localCheckpoint
-  // calls queryExecution.toRdd, and AdaptiveSparkPlanExec.execute runs the
-  // full adaptive loop, materialising every shuffle stage serially right
-  // there. The old eager=false therefore paid the same serial jobs AND
-  // never truncated the RDD graph (AQE materialises stages via
-  // DAGScheduler.submitMapStage, which skips the rdd.doCheckpoint() hook
-  // that truncation relies on), so task binaries grew cumulatively along
-  // the pipeline (2 -> 13 MiB on the 10-row micro corpus) and cached
-  // partitions were silently recomputed ("Block rdd_N already exists").
-  // Eager adds one result-stage job per barrier but truncates for real:
-  // micro-pipeline def 16.8 s -> 14.8 s, and every downstream stage ships
-  // kilobyte task binaries.
-  def apply(name: String, df: => DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
-}
-
-/** LocalCheckpointer + per-stage wall-time on stderr (bench profiling).
-  * Each stage's eager materialisation runs under a job group named after
-  * the stage, so a listener can attribute task CPU/run time per pipeline
-  * stage (ScalingBench's DRAM-wall accounting). */
-object TimedLocalCheckpointer extends Checkpointer {
-  def apply(name: String, df: => DataFrame): DataFrame = {
-    val d = df
-    val sc = d.sparkSession.sparkContext
-    val t0 = System.nanoTime()
-    sc.setJobGroup(name, s"stage $name")
-    val out = try d.localCheckpoint() finally sc.clearJobGroup()
-    System.err.println(f"[stage] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    out
-  }
+  def apply(name: String, df: => DataFrame): DataFrame = Materialize(df)
 }
 
 class ParquetCheckpointer(spark: SparkSession, dir: String) extends Checkpointer {

@@ -29,23 +29,16 @@ object ScaleGen {
     * are near-unique entity names; a tiny vocabulary creates cross-class
     * token collisions no real corpus has (and additive class weights then
     * amplify the noise — see ClassDecision semantics). */
-  /** `hotToken` > 0 plants a deliberately Zipfian shared token: every
-    * hotToken-th entity's label gains the literal token "hotshared", so
-    * the candidate token join sees ONE key whose index df is
-    * nEntities/hotToken and whose web-side occurrences scale with the
-    * corpus — the pathological head key the saltHotTokenDf guard exists
-    * for (tools.SaltProbe measures salted vs plain on this shape).
-    * Default 0: no change to any existing corpus. */
   /** `tableNamePad` > 0 pads table names with a deterministic per-table
     * hex infix of that length — real web-table corpora carry long opaque
     * file names (T2D: ~34 chars), and the shuffle-weight effect of
     * carrying the name string through hot keys only shows at realistic
-    * lengths (tools.TableIdProbe). Default 0: names stay "tblN.csv". */
+    * lengths. Default 0: names stay "tblN.csv". */
   case class Config(nClasses: Int = 20, nEntities: Int = 20000,
                     nTables: Int = 200, rowsPerTable: Int = 50,
                     vocab: Int = 300000, labelTokens: Int = 3,
                     noisePct: Int = 10, mediaEvery: Int = 7, seed: Long = 42L,
-                    hotToken: Int = 0, tableNamePad: Int = 0)
+                    tableNamePad: Int = 0)
 
   /** Table name for a tableId column under `cfg` (see tableNamePad). */
   def tableNameExpr(cfg: Config, tableId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -75,12 +68,8 @@ object ScaleGen {
         when(col("id") >= bounds(k) && col("id") < bounds(k + 1), lit(k)).otherwise(acc)
       }
     }
-    val lbl0 = concat_ws(" ", (0 until cfg.labelTokens).map(s =>
+    val lbl = concat_ws(" ", (0 until cfg.labelTokens).map(s =>
       word(xxhash64(lit(cfg.seed), col("id"), lit(s)), cfg.vocab)): _*)
-    val lbl = if (cfg.hotToken > 0)
-      when(pmod(col("id"), lit(cfg.hotToken)) === 0,
-        concat(lbl0, lit(" hotshared"))).otherwise(lbl0)
-    else lbl0
     spark.range(bounds.last)
       .withColumn("classId", classIdExpr)
       .withColumn("uri", concat(lit("kb://e"), col("id")))

@@ -179,6 +179,8 @@ object TextAnalysis {
   private[ops] def repKernel(toks: Seq[String], topNs: Array[Int],
                              dupNs: Array[Int]): Array[Double] = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
+    // null text tokenises to a null array: the all-zero row, as for L == 0
+    if (toks == null) return new Array[Double](topNs.length + dupNs.length)
     val L = toks.length
     val lens = new Array[Int](L)
     val tk = new Array[Long](L)
@@ -237,57 +239,6 @@ object TextAnalysis {
     }
     topNs.map(n => topv.get(n).doubleValue()) ++
       dupNs.map(n => dupv.get(n).doubleValue())
-  }
-
-  /** The original 3-exchange expression implementation — retained as the
-    * semantic definition for the OpsSpec parity gate on [[repKernel]]. */
-  private[ops] def repetitionExpr(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text",
-                 topNs: Seq[Int] = Seq(2, 3, 4),
-                 dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
-    val allNs = (topNs ++ dupNs).distinct.sorted
-    val base = docs.select(col(idCol).as("docId"),
-        tokensCol(col(textCol)).as("toks"))
-      .withColumn("totalLen",
-        length(concat_ws(" ", col("toks"))).cast("double"))
-    // explode cheap (n, startIdx) index structs, compute the gram AFTER
-    // the explode: the per-row array holds two ints per window instead
-    // of built strings, and the hash/length stream through codegen
-    val idxType = "array<struct<n:int,i:int>>"
-    val idxArrays = allNs.map { n =>
-      when(size(col("toks")) >= n,
-        transform(sequence(lit(0), size(col("toks")) - n),
-          i => struct(lit(n).as("n"), i.cast("int").as("i"))))
-        .otherwise(lit(null).cast(idxType))
-    }
-    val gram = concat_ws(" ",
-      slice(col("toks"), col("p.i") + lit(1), col("p.n")))
-    val counts = base
-      .select(col("docId"), col("totalLen"), col("toks"),
-        explode(concat(idxArrays.map(a =>
-          coalesce(a, array().cast(idxType))): _*)).as("p"))
-      .select(col("docId"), col("totalLen"), col("p.n").as("n"),
-        xxhash64(gram).as("gh"), length(gram).as("glen"))
-      .groupBy(col("docId"), col("n"), col("gh"))
-      .agg(count(lit(1)).as("cnt"), first(col("glen")).as("glen"),
-        first(col("totalLen")).as("totalLen"))
-    val perN = counts.groupBy(col("docId"), col("n"))
-      .agg(
-        least(max(col("cnt") * col("glen")) / first(col("totalLen")), lit(1.0))
-          .as("topv"),
-        least(coalesce(sum(when(col("cnt") >= 2, col("cnt") * col("glen"))),
-          lit(0L)) / first(col("totalLen")), lit(1.0)).as("dupv"))
-    val aggs = topNs.map(n =>
-        max(when(col("n") === n, col("topv"))).as(s"top_${n}gram_char_frac")) ++
-      dupNs.map(n =>
-        max(when(col("n") === n, col("dupv"))).as(s"dup_${n}gram_char_frac"))
-    val metrics = perN.groupBy(col("docId")).agg(aggs.head, aggs.tail: _*)
-    val out = base.select(col("docId")).join(metrics, Seq("docId"), "left")
-    val fracCols = topNs.map(n => s"top_${n}gram_char_frac") ++
-      dupNs.map(n => s"dup_${n}gram_char_frac")
-    fracCols.foldLeft(out) { (df, c) =>
-      df.withColumn(c, coalesce(col(c), lit(0.0)))
-    }.withColumnRenamed("docId", idCol)
   }
 }
 

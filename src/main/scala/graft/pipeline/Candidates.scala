@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import graft.checkpoint.Materialize
 import graft.text.Normalize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Candidate generation / selection / refinement (SURVEY.md §2.2 B1-B2,
@@ -133,7 +135,6 @@ object Candidates {
   private def exactPerName(kt: DataFrame, candidateTokens: DataFrame,
                            classesPerTable: Option[DataFrame],
                            withIdf: Boolean,
-                           saltHotTokenDf: Long,
                            simThreshold: Double): DataFrame = {
     // NAME-level distinct: candidateTokens carries one row per (uri,
     // name, token), and entities SHARING a name (surface forms, duplicate
@@ -144,17 +145,7 @@ object Candidates {
     val idxCols = Seq(col("classId"), col("nameId"), col("nNameTok"),
       col("token")) ++ (if (withIdf) Seq(col("idf")) else Nil)
     val idx = candidateTokens.select(idxCols: _*).distinct()
-    // Explicit hot-token salting (opt-in): tokens whose index-side df
-    // reaches the threshold join through Salt.skewSplitJoin — the index
-    // rows spread across 8 salted partitions instead of one straggler.
-    // Default off: CandidateIndex.dfCap already drops stop tokens and AQE
-    // splits moderate skew; this is the guard for a corpus where even the
-    // capped df concentrates in one executor's memory.
-    val hits0 =
-      if (saltHotTokenDf > 0L)
-        graft.util.Salt.skewSplitJoin(idx, kt, "token", 8,
-          saltHotTokenDf, Seq("nameId"))
-      else kt.join(idx, "token")
+    val hits0 = kt.join(idx, "token")
     // No broadcast hint: classesPerTable is O(#tables) rows — at
     // millions of tables that's a multi-GB driver broadcast. AQE
     // decides; the left-semi is fine as a shuffle. `cpt` arrives
@@ -312,15 +303,13 @@ object Candidates {
                classesPerTable: Option[DataFrame] = None,
                maxEditDistance: Int = 0, variantTokenDfCap: Long = 2000,
                variants: Option[DataFrame] = None,
-               rankByIdf: Boolean = false,
-               saltHotTokenDf: Long = 0L): DataFrame = {
+               rankByIdf: Boolean = false): DataFrame = {
     val kt = keyTokens(cells, keyCols)
     val cptEnc = classesPerTable.map(_
       .select(xxhash64(col("tableName")).as("tableId"), col("classId")))
     val perName =
       if (maxEditDistance <= 0) {
-        exactPerName(kt, candidateTokens, cptEnc, rankByIdf,
-          saltHotTokenDf, simThreshold)
+        exactPerName(kt, candidateTokens, cptEnc, rankByIdf, simThreshold)
       } else {
         // Fuzzy-on-miss: the exact leg runs for ALL rows; the deletion-
         // variant join runs ONLY for rows whose exact pass produced no
@@ -329,15 +318,13 @@ object Candidates {
         // above the threshold keep their exact candidate set). This keeps
         // the expensive variant join proportional to the MISS count, not
         // the corpus.
-        // Lazy lineage cut: the exact leg feeds both the miss-row filter
-        // and the result union — cached at its first action, reclaimed by
-        // the ContextCleaner (no CacheManager entry to leak across calls).
-        // SERIALIZED storage: the default deserialized blocks are ~10x the
-        // on-wire size and OOM'd a 32-thread 8g JVM on the T2D corpus
-        // while the per-name aggregation was still running alongside.
-        val exact = exactPerName(kt, candidateTokens, cptEnc,
-          withIdf = false, saltHotTokenDf, simThreshold).localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        // Materialized: the exact leg feeds both the miss-row filter and
+        // the result union. SERIALIZED storage: the default deserialized
+        // blocks are ~10x the on-wire size and OOM'd a 32-thread 8g JVM
+        // on the T2D corpus while the per-name aggregation was still
+        // running alongside.
+        val exact = Materialize(exactPerName(kt, candidateTokens, cptEnc,
+          withIdf = false, simThreshold), StorageLevel.MEMORY_AND_DISK_SER)
         // exactPerName already applies the per-name threshold, so hit
         // rows are simply the rows with ANY surviving exact candidate
         val hitRows = exact.select("tableId", "rowNum").distinct()

@@ -1,12 +1,13 @@
 package graft.pipeline
 
-import graft.checkpoint.{Checkpointer, LocalCheckpointer}
+import graft.checkpoint.{Checkpointer, LocalCheckpointer, Materialize}
 import graft.kb.{CandidateIndex, KbIngest}
 import graft.model.SpanCodec
 import graft.triples.Triples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * The full matching pipeline (reference T2KMatch.match(),
@@ -32,8 +33,7 @@ case class T2KConfig(
   numIterations: Int = 1,                                             // T2KMatch.java:153-154
   tokenDfCap: Long = 100000, mappedRatio: Double = 0.0,
   variantTokenDfCap: Long = 2000,   // fuzzy deletion-variant guard; unit = DISTINCT TOKENS per deletion shape (round-3 change from row-level occurrences — far weaker pruning needed; revisit any tuning against the old unit)
-  idfRanking: Boolean = true,                                         // IDF-weighted selection cut (Lucene TF-IDF analog; measured +0.34pp T2D selection recall, no loss)
-  saltHotTokenDf: Long = 0)                                           // >0: salt the candidate token join for tokens at/above this df
+  idfRanking: Boolean = true)                                         // IDF-weighted selection cut (Lucene TF-IDF analog; measured +0.34pp T2D selection recall, no loss)
 
 /** `schemaCombined` is the final iteration's PRE-top-1 combined schema
   * corr matrix — the input the reference's SF emission filter consumed
@@ -43,12 +43,12 @@ case class T2KResult(instanceCorrs: DataFrame, schemaCorrs: DataFrame,
                      classCorrs: DataFrame, triples: DataFrame,
                      schemaCombined: DataFrame,
                      cached: Seq[DataFrame] = Nil) {
-  /** Unpersist the dims run() pinned. Only the non-local persist()
-    * fallback registers frames here (CacheManager entries outlive the
-    * call — a sweep-style caller invoking run() per corpus would
-    * accumulate them for the life of the app otherwise); local-master
-    * checkpoint blocks are ContextCleaner-reclaimed and register
-    * nothing. Call once the result frames are written/collected. */
+  /** Unpersist the frames run() pinned: those [[Materialize]] persisted
+    * (non-local masters). CacheManager entries outlive the call — a
+    * sweep-style caller invoking run() per corpus would accumulate them
+    * for the life of the app otherwise; local-master checkpoint blocks
+    * are ContextCleaner-reclaimed and register nothing. Call once the
+    * result frames are written/collected. */
   def release(): Unit = cached.foreach { df =>
     try df.unpersist(blocking = false) catch { case _: Throwable => () }
   }
@@ -63,35 +63,6 @@ object T2KPipeline {
           .orderBy(col("score").desc, col(tieCol).asc)))
       .filter(col("rk") === 1).drop("rk")
 
-  /** Lazy LOCAL CHECKPOINT for reused dims — materialise once at the
-    * first action (no serial job barrier) AND truncate the logical plan.
-    * The r4 persist()-based version kept each dim's full plan visible to
-    * every consumer, so the classes/pairs/dup0 subtrees (which nest each
-    * other) were re-ANALYZED inside every downstream stage's definition:
-    * measured 22 s of the micro pipeline's 29 s driver-side Catalyst
-    * work, and the same multiplicative re-analysis on every corpus.
-    * Truncation bounds each subtree's planning to once. Blocks are
-    * ContextCleaner-reclaimed.
-    *
-    * LOCAL MASTERS ONLY: checkpointed blocks are NOT recomputable, so on
-    * a real cluster an executor loss (or dynamic-allocation decommission)
-    * would fail the job instead of recomputing the dim. Non-local masters
-    * therefore fall back to persist(): each consumer stage re-analyzes
-    * the dim's (small) plan, but the job survives block loss; durable
-    * truncation on a cluster is the ParquetCheckpointer's job. */
-  private def cacheInto(pinned: collection.mutable.Buffer[DataFrame])
-                       (df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal)
-      // eager: same rationale as LocalCheckpointer (r7) — AQE materialises
-      // the stages at definition either way; eager additionally truncates
-      // the RDD graph so downstream task binaries stay small
-      df.localCheckpoint(true)
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned += p
-      p
-    }
-
   def run(docs: DataFrame, kb: KbIngest.Ingested, surfaceForms: DataFrame,
           hierarchy: Map[String, String],
           cfg: T2KConfig = T2KConfig(),
@@ -101,17 +72,28 @@ object T2KPipeline {
       System.err.println(f"[deftime] $l ${(System.nanoTime() - _t) / 1e9}%.2f s")
       _t = System.nanoTime()
     }
+    // Reused dims go through Materialize. On a local master it also cuts
+    // the plan: with persist() alone the nested classes/pairs/dup0
+    // subtrees were re-analyzed inside every downstream stage (22 s of
+    // the micro pipeline's 29 s driver-side Catalyst work). Frames it
+    // persisted are pinned for release(), so the pipeline never asks
+    // which master path ran.
     val pinned = collection.mutable.ArrayBuffer[DataFrame]()
-    val cache = cacheInto(pinned) _
+    def pin(df: DataFrame): DataFrame = {
+      if (df.storageLevel != StorageLevel.NONE) pinned += df
+      df
+    }
+    def cache(df: DataFrame): DataFrame = pin(Materialize(df))
+    def stage(name: String, df: => DataFrame): DataFrame = pin(ckpt(name, df))
 
     // --- decode + dims (S1) ---------------------------------------------
-    val cells = ckpt("cells", SpanCodec.cells(docs))
+    val cells = stage("cells", SpanCodec.cells(docs))
     val webCols = cache(SpanCodec.columns(docs)) // small dim: one row/column
     val keyCols = Keys.detect(webCols)
     val keyCorrs = Keys.keyCorrs(keyCols)
     // kb.cells feeds ~8 downstream joins: checkpoint once so each reuse
     // references the materialised table, not the full ingest lineage.
-    val kbCells = ckpt("kb_cells", kb.cells)
+    val kbCells = stage("kb_cells", kb.cells)
     // from the header block (NOT from cell values): valueless properties
     // still exist for label matching and class refinement
     val kbPropsByClass = cache(kb.propsByClass)
@@ -119,14 +101,14 @@ object T2KPipeline {
 
     mark("dims")
     // --- candidate index (S5) -------------------------------------------
-    val index = ckpt("candidate_tokens",
+    val index = stage("candidate_tokens",
       CandidateIndex.build(kbCells, surfaceForms, cfg.tokenDfCap))
     // deletion-variant expansion: a pure function of the index — built and
     // checkpointed ONCE here; rebuilding it inside each generate() call was
     // the refinement stage's dominant cost (270 s on the T2D run)
     val variants =
       if (cfg.refinementEditDistance > 0)
-        Some(ckpt("candidate_variants",
+        Some(stage("candidate_variants",
           Candidates.variantIndex(index, cfg.variantTokenDfCap)))
       else None
 
@@ -145,9 +127,9 @@ object T2KPipeline {
     // --- candidate selection (B1 + R1/R2) -------------------------------
     // checkpointed: consumed by the class decision AND as the refinement
     // pass's exact leg (refineFromSelection) — the token join runs ONCE.
-    val selection = ckpt("candidates_selected", spread(Candidates.generate(
+    val selection = stage("candidates_selected", spread(Candidates.generate(
       cells, keyCols, index, cfg.selectionCandidates, cfg.selectionThreshold,
-      rankByIdf = cfg.idfRanking, saltHotTokenDf = cfg.saltHotTokenDf)))
+      rankByIdf = cfg.idfRanking)))
 
     mark("selection_def")
     // --- class decision (A1-A3) -----------------------------------------
@@ -156,7 +138,7 @@ object T2KPipeline {
 
     mark("classes0_def")
     // --- candidate refinement (class-filtered, th 0.7, fuzzy-on-miss) ---
-    val refined = ckpt("candidates_refined", spread(
+    val refined = stage("candidates_refined", spread(
       Candidates.refineFromSelection(selection, classes0, cells, keyCols,
         index, cfg.refinementCandidates, cfg.refinementThreshold,
         cfg.refinementEditDistance, cfg.variantTokenDfCap, variants)))
@@ -185,7 +167,7 @@ object T2KPipeline {
     // round-robin repartition only added a second full shuffle of the
     // refined set (the r3 profile's worst stage: 538 task-s at 0.441
     // cpu/run on the 505k-doc run, half of it the extra exchange).
-    val candidates = ckpt("candidates_filtered",
+    val candidates = stage("candidates_filtered",
       Classes.filterCandidates(refined, classes))
 
     mark("dup0_classes")
@@ -210,13 +192,13 @@ object T2KPipeline {
       val combined = Schema.combine(dup, label, keyCorrs,
         cfg.combineWeightDup, cfg.combineWeightLabel, cfg.combineThreshold)
       schemaCorrs = if (it == 0) combined else Schema.update(schemaCorrs, combined)
-      schemaCorrs = ckpt(s"schema_corrs_it$it", schemaCorrs)
+      schemaCorrs = stage(s"schema_corrs_it$it", schemaCorrs)
       val resolved = spread(Identity.resolve(
         instanceCands, schemaCorrs, keyCols, cells, kbCells, webCols,
         cfg.keyWeight, cfg.irThreshold))
       instanceCands =
         if (it == nIter - 1 && !ckpt.durable) resolved
-        else ckpt(s"instance_cands_it$it", resolved)
+        else stage(s"instance_cands_it$it", resolved)
     }
 
     mark("loop_def")
@@ -251,7 +233,7 @@ object T2KPipeline {
     // durable stage via ckpt
     val triplesDf = Triples.generate(instF, schemaF, cells, kbCells,
       kb.props, webCols)
-    val triples = if (ckpt.durable) ckpt("triples", triplesDf) else triplesDf
+    val triples = if (ckpt.durable) stage("triples", triplesDf) else triplesDf
 
     mark("triples_def")
     T2KResult(instF, schemaF, classCorrs, triples, schemaCorrs, pinned.toSeq)

@@ -47,16 +47,7 @@ class ScaleSpec extends SparkSpec {
     assert(prf.precision >= 0.95 && prf.recall >= 0.95, s"class: $prf")
   }
 
-  test("generator knobs: hotToken plants the head token, tableNamePad pads names") {
-    val hot = cfg.copy(nEntities = 1000, hotToken = 10)
-    val e = ScaleGen.entities(spark, hot)
-    val nHot = e.filter(col("label").endsWith(" hotshared")).count()
-    assert(nHot === e.filter(pmod(col("entityId"), lit(10)) === 0).count())
-    assert(nHot >= 90 && nHot <= 110) // every 10th of ~1000 (Zipf rounding)
-    // default config: no hotshared anywhere (existing corpora unchanged)
-    assert(ScaleGen.entities(spark, cfg.copy(nEntities = 1000))
-      .filter(col("label").contains("hotshared")).count() === 0)
-
+  test("generator knob: tableNamePad pads names") {
     val padded = cfg.copy(nTables = 20, rowsPerTable = 5, tableNamePad = 28)
     val names = ScaleGen.webCorpus(spark, padded)._1
       .select(org.apache.spark.sql.functions.substring_index(

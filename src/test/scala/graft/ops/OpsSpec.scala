@@ -316,14 +316,15 @@ class OpsSpec extends SparkSpec {
       (i.toLong, toks.mkString(" "))
     }
     val corpus = (gen ++ Seq((900L, ""), (901L, "one"),
-      (902L, "a b a b a b"), (903L, "!!! ??? ..."))).toDF("doc_id", "text")
+      (902L, "a b a b a b"), (903L, "!!! ??? ..."), (904L, null)))
+      .toDF("doc_id", "text")
     val cols = Seq("top_2gram_char_frac", "top_3gram_char_frac",
       "top_4gram_char_frac", "dup_5gram_char_frac", "dup_10gram_char_frac")
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") ->
         cols.map(c => r.getAs[Double](c))).toMap
     val kernel = m(TextAnalysis.repetition(corpus))
-    val expr = m(TextAnalysis.repetitionExpr(corpus))
+    val expr = m(ExprForms.repetitionExpr(corpus))
     assert(kernel.keySet === expr.keySet)
     kernel.foreach { case (id, vs) =>
       assert(vs === expr(id), s"doc $id kernel=$vs expr=${expr(id)}") }
@@ -337,7 +338,7 @@ class OpsSpec extends SparkSpec {
       ).toDF("vec_id", "embedding")
     val tables = 4; val nBits = 12; val dim = 64
     val exprCols = array((0 until tables).map(t =>
-      SimSearch.signBucketExpr(col("embedding"), t, nBits, dim)): _*)
+      ExprForms.signBucketExpr(col("embedding"), t, nBits, dim)): _*)
     val both = vecs.select(col("vec_id"),
       SimSearch.bucketsColForTest(col("embedding"), tables, nBits, dim).as("k"),
       exprCols.as("e")).collect()
@@ -354,9 +355,9 @@ class OpsSpec extends SparkSpec {
     val cents = Array.fill(7)(Array.fill(16)(rnd.nextDouble() * 2 - 1))
     val both = vecs.select(col("vec_id"),
       SimSearch.nearestCellColForTest(col("v"), cents).as("nk"),
-      SimSearch.nearestCellExpr(col("v"), cents).as("ne"),
+      ExprForms.nearestCellExpr(col("v"), cents).as("ne"),
       SimSearch.probeCellsColForTest(col("v"), cents, 3).as("pk"),
-      SimSearch.probeCellsExpr(col("v"), cents, 3).as("pe")).collect()
+      ExprForms.probeCellsExpr(col("v"), cents, 3).as("pe")).collect()
     both.foreach { r =>
       assert(r.getInt(1) === r.getInt(2), s"nearest vec ${r.getLong(0)}")
       assert(r.getSeq[Int](3) === r.getSeq[Int](4), s"probe vec ${r.getLong(0)}")
